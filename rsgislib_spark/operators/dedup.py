@@ -238,7 +238,7 @@ def _exact_pairs_blocked(sh: DataFrame, threshold: float) -> DataFrame:
                                         "b": np.concatenate(ob),
                                         "jaccard": np.concatenate(oj)})
 
-    blocks = spark.range(n_blocks).repartition(n_blocks)
+    blocks = spark.range(0, n_blocks, 1, n_blocks)
     return blocks.mapInPandas(gen, "a BIGINT, b BIGINT, jaccard DOUBLE")
 
 

@@ -160,3 +160,19 @@ def test_spread_scan_gates(spark, tmp_path):
     assert _parse_bytes("128MB") == 128 << 20
     assert _parse_bytes("1g") == 1 << 30
     assert _parse_bytes("4194304b") == 4 << 20
+
+
+def test_spread_scan_vanished_file(spark, tmp_path):
+    """A file deleted after planning cannot be sized; spread_scan
+    falls back to the partition gate instead of raising. One split is
+    below the parallelism floor, so the frame is spread."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rsgislib_spark.session import spread_scan
+
+    path = tmp_path / "gone.parquet"
+    pq.write_table(pa.table({"x": list(range(10))}), str(path))
+    df = spark.read.parquet(str(path))
+    path.unlink()
+    assert spread_scan(df) is not df
