@@ -101,12 +101,12 @@ def knn_broadcast(points: DataFrame, sites: DataFrame, k: int = 1,
     # spread the point side: the O(|pts| * |sites|) distance kernel is
     # the whole cost of this operator, and a few-row-group parquet
     # source would hand it to one or two tasks (each row is
-    # independent, so the exchange changes nothing else). Hash-spread
-    # on (lon, lat) — near-unique deterministic values on any point
-    # layer — skips round-robin's local sort in the scan task
+    # independent, so the exchange changes nothing else). Round-robin,
+    # not a hash on (lon, lat): duplicated or grid-snapped coordinates
+    # would funnel to one task, and the kernel dwarfs the local sort
     from ..session import spread_scan
 
-    return spread_scan(points, by=(lon, lat)).mapInPandas(_nn, schema=schema)
+    return spread_scan(points).mapInPandas(_nn, schema=schema)
 
 
 def knn_kring(points: DataFrame, sites: DataFrame, res: int | None = None,

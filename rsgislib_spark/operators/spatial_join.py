@@ -20,10 +20,12 @@ Scale notes (the 100 TB story):
   pandas UDF. This mirrors the reference loading the small layer
   fully in memory (vectorattrs/__init__.py:1293) but distributes the
   probe side.
-- For large polygon sets the cover is a DataFrame and Catalyst picks
-  a shuffle hash join on the cell key; dense cells (cities) are the
-  skew risk — see tiling.salt_hot_cells and AQE skew-join config in
-  session.py.
+- For polygon layers too large to collect, ``spatial_join_df`` keeps
+  everything distributed: the cover is a DataFrame (poly_cover_df),
+  the candidates join (poly_id, wkb) on poly_id and ONE mapInPandas
+  pass ray-casts them. Catalyst and AQE choose every join strategy;
+  a hot polygon or dense cell is split by AQE's skew join (enabled in
+  session.DEFAULTS).
 - The refine UDF sees only candidates that already passed cell AND
   bbox filters (both JVM-side), so Python touches a small fraction of
   rows — the reference's filter-refine trick
@@ -393,7 +395,6 @@ def spatial_join_df(points: DataFrame, polys: DataFrame,
                     res: int | None = None, max_cells: int = 8,
                     id_col: str = "poly_id", geom_col: str = "geometry",
                     pt_id_col: str | None = None,
-                    salt: int = 8, refine_buckets: int = 64,
                     with_payload: bool = True) -> DataFrame:
     """Spatial join against a polygon DataFrame TOO LARGE TO COLLECT —
     the DataFrame-native path the reference's sjoin implies for
@@ -403,17 +404,14 @@ def spatial_join_df(points: DataFrame, polys: DataFrame,
     1. cover = poly_cover_df (distributed, adaptive per-polygon res);
     2. candidates = points ⋈ cover on the cell key + codegen bbox
        prefilter (the exact filter spatial_join uses);
-    3. refine = COGROUPED applyInPandas on (hash-bucket(poly_id),
-       salt): each group receives its bucket's polygon WKBs plus the
-       candidates for those polygons — rings travel with the batch,
-       never in a UDF closure, and each polygon is decoded once per
-       group. Bucketing (NOT per-polygon groups) keeps the group
-       count CONSTANT at refine_buckets*salt: per-group Python
-       overhead would otherwise scale with |polygons| and dominate
-       (measured 10x on a 100k-polygon layer). ``salt`` splits a hot
-       polygon's candidates across ``salt`` tasks (the polygon rows
-       are replicated salt-fold — KBs per task, vs a continent's
-       candidate list in ONE task);
+    3. refine = candidates ⋈ (poly_id, wkb) on poly_id, then ONE
+       mapInPandas pass: rings travel with the candidate rows, never
+       in a UDF closure, and each Arrow batch is sorted by poly_id so
+       a polygon is decoded once per run. Python sees only the
+       candidates (no per-group calls, no polygon without a
+       candidate); broadcast vs shuffle for this join is Catalyst's
+       and AQE's choice, and a hot polygon's candidates are split by
+       AQE's skew join (spark.sql.adaptive.skewJoin.enabled);
     4. matched pairs are slim (pt_id, poly_id); payload joins back
        once on the id key (the spatial_join pt_id discipline).
 
@@ -440,13 +438,16 @@ def spatial_join_df(points: DataFrame, polys: DataFrame,
         points = points.withColumn(
             pt_id, F.monotonically_increasing_id()).localCheckpoint()
 
-    cover = poly_cover_df(polys, res, max_cells, id_col, geom_col)
-    # iterative consumer (res_set now, candidates later) → cache the
-    # cover, not the polygons (cover is the small derived table)
-    cover = cover.persist()
+    # the cover is read twice (res probe now, candidates later):
+    # materialize it once. localCheckpoint, not persist: a persisted
+    # cover would stay in the session's CacheManager after the result
+    # is consumed and answer any later query with the same plan; a
+    # checkpoint is not registered there, and the ContextCleaner frees
+    # its blocks once the frame is unreachable
+    cover = poly_cover_df(polys, res, max_cells, id_col,
+                          geom_col).localCheckpoint()
     # ONE aggregate action yields both the distinct-res probe set and
-    # the cover row count (the broadcast gate below) — same job cost
-    # as the previous select("res").distinct()
+    # the cover row count (the broadcast gate below)
     res_rows = cover.groupBy("res").count().collect()
     res_set = sorted(r["res"] for r in res_rows)
     n_cover = sum(r["count"] for r in res_rows)
@@ -489,72 +490,50 @@ def spatial_join_df(points: DataFrame, polys: DataFrame,
                & (F.col(lat) >= F.col("ymin")) & (F.col(lat) <= F.col("ymax")))
         )
         .select(pt_id, lon, lat, "poly_id")
-        .withColumn("_bkt", F.pmod(F.xxhash64("poly_id"),
-                                   F.lit(refine_buckets)).cast("int"))
-        .withColumn("_salt", F.pmod(F.xxhash64(pt_id), F.lit(salt)).cast("int"))
     )
-    # cast to BIGINT before hashing: xxhash64 is TYPE-sensitive
-    # (hashInt != hashLong for the same value), and the cand side's
-    # poly_id is BIGINT via poly_cover_df's declared schema — hashing
-    # an INT id column raw would land the two sides in different
-    # buckets and silently produce an empty join
-    polys_s = polys.select(
+    # rings travel with each candidate row (never in a UDF closure):
+    # the poly_id equi-join is an ordinary Catalyst join, so the
+    # session's confs pick broadcast vs shuffle and AQE splits a hot
+    # polygon's candidates (skewJoin). The id is cast to BIGINT to
+    # match the cover side's declared type.
+    cand = cand.join(polys.select(
         F.col(id_col).cast("bigint").alias("poly_id"),
-        F.col(geom_col).alias("_wkb")
-    ).withColumn("_bkt", F.pmod(F.xxhash64("poly_id"),
-                                F.lit(refine_buckets)).cast("int")) \
-     .withColumn("_salt", F.explode(F.array(*[F.lit(s) for s in range(salt)])))
+        F.col(geom_col).alias("_wkb")), "poly_id")
 
     pt_id_type = dict(points.dtypes)[pt_id]
     out_schema = f"`{pt_id}` {pt_id_type}, poly_id BIGINT"
-    from ..geometry import predicates as P
 
-    def refine(cand_pdf: pd.DataFrame, poly_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            pt_id: pd.Series([], dtype=cand_pdf[pt_id].dtype
-                             if pt_id in cand_pdf else "int64"),
-            "poly_id": pd.Series([], dtype="int64")})
-        if cand_pdf.empty or poly_pdf.empty:
-            return empty
-        wkb_by_id = dict(zip(poly_pdf["poly_id"].to_numpy(),
-                             poly_pdf["_wkb"]))
-        # decode each polygon ONCE per group, ray-cast its candidate
-        # batch vectorized (same kernel as PolygonIndex.refine_udf).
-        # Candidates are sliced as numpy RUNS of a sorted poly_id
-        # array — the previous pandas groupby/.loc/.copy per polygon
-        # cost ~1.3 ms of frame overhead per candidate polygon
-        # (measured 79 s CPU per pass on the 100k-diamond layer, vs
-        # ~3 s this way); the kept mask is one boolean array, and the
-        # output is assembled once.
-        pid_arr = cand_pdf["poly_id"].to_numpy(np.int64)
-        order = np.argsort(pid_arr, kind="stable")
-        pid_s = pid_arr[order]
-        x_all = cand_pdf[lon].to_numpy(dtype=np.float64)[order]
-        y_all = cand_pdf[lat].to_numpy(dtype=np.float64)[order]
-        ptid_s = cand_pdf[pt_id].to_numpy()[order]
-        bounds = np.flatnonzero(
-            np.r_[True, pid_s[1:] != pid_s[:-1], True])
-        keep = np.zeros(len(pid_s), dtype=bool)
-        for i in range(len(bounds) - 1):
-            lo, hi = bounds[i], bounds[i + 1]
-            g = wkb_by_id.get(pid_s[lo])
-            if g is None:
+    def refine(batches):
+        # sort each Arrow batch by poly_id and slice it into numpy RUNS:
+        # each polygon is decoded ONCE per run and its candidates are
+        # ray-cast vectorized (same kernel as PolygonIndex.refine_udf).
+        # A pandas groupby/.loc/.copy per polygon cost ~1.3 ms of frame
+        # overhead per candidate polygon (measured 79 s CPU per pass on
+        # the 100k-diamond layer, vs ~3 s this way).
+        for pdf in batches:
+            if pdf.empty:
                 continue
-            rings = P.unwrap_antimeridian(wkb.wkb_to_rings(bytes(g)))
-            xs = x_all[lo:hi]
-            if P.ring_bbox(rings)[2] > 180.0:
-                xs = np.where(xs < 0.0, xs + 360.0, xs)
-            keep[lo:hi] = P.point_in_rings(xs, y_all[lo:hi], rings)
-        if not keep.any():
-            return empty
-        return pd.DataFrame({pt_id: ptid_s[keep],
-                             "poly_id": pid_s[keep]})
+            pid_arr = pdf["poly_id"].to_numpy(np.int64)
+            order = np.argsort(pid_arr, kind="stable")
+            pid_s = pid_arr[order]
+            x_all = pdf[lon].to_numpy(dtype=np.float64)[order]
+            y_all = pdf[lat].to_numpy(dtype=np.float64)[order]
+            ptid_s = pdf[pt_id].to_numpy()[order]
+            wkbs = pdf["_wkb"].to_numpy()
+            bounds = np.flatnonzero(
+                np.r_[True, pid_s[1:] != pid_s[:-1], True])
+            keep = np.zeros(len(pid_s), dtype=bool)
+            for lo, hi in zip(bounds[:-1], bounds[1:]):
+                rings = predicates.unwrap_antimeridian(
+                    wkb.wkb_to_rings(bytes(wkbs[order[lo]])))
+                xs = x_all[lo:hi]
+                if predicates.ring_bbox(rings)[2] > 180.0:
+                    xs = np.where(xs < 0.0, xs + 360.0, xs)
+                keep[lo:hi] = predicates.point_in_rings(xs, y_all[lo:hi], rings)
+            yield pd.DataFrame({pt_id: ptid_s[keep],
+                                "poly_id": pid_s[keep]})
 
-    pairs = (
-        cand.groupBy("_bkt", "_salt")
-        .cogroup(polys_s.groupBy("_bkt", "_salt"))
-        .applyInPandas(refine, out_schema)
-    )
+    pairs = cand.mapInPandas(refine, out_schema)
 
     if not with_payload:
         return pairs

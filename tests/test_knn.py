@@ -115,6 +115,21 @@ def test_knn_haversine_matches_brute(spark, pts):
         assert out[r.pt_id][1] == d[j]
 
 
+def test_knn_broadcast_spreads_duplicated_points(spark):
+    """A single-partition layer whose points all share ONE coordinate
+    still reaches more than one task: the point side is spread
+    round-robin, not hashed on (lon, lat)."""
+    from pyspark.sql import functions as F
+
+    dup = spark.range(0, 2000, 1, 1).select(
+        F.col("id").alias("pt_id"), F.lit(12.5).alias("lon"),
+        F.lit(-7.25).alias("lat"))
+    out = knn.knn_broadcast(dup, derived.sites_df(spark))
+    parts = out.select(F.spark_partition_id().alias("p")).distinct().count()
+    assert parts > 1
+    assert out.select("nn_site_id").distinct().count() == 1
+
+
 def test_radius_count_haversine_matches_brute(spark, pts):
     """Latitude-band self-join + haversine filter == brute force,
     including any near-pole points (band join is pole-safe)."""

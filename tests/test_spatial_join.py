@@ -205,7 +205,7 @@ def polys_wkb_df(spark):
 
 @pytest.mark.parametrize("how", ["inner", "left", "left_semi", "right"])
 def test_spatial_join_df_matches_index_path(pts, polys_wkb_df, how):
-    """spatial_join_df (distributed cover + cogrouped refine, no
+    """spatial_join_df (distributed cover + mapInPandas refine, no
     driver collect) == spatial_join (driver PolygonIndex) for every
     join mode, including the antimeridian polygon."""
     idx = sj.PolygonIndex.from_fixture(fixtures.POLYGONS, res=None)
@@ -238,13 +238,54 @@ def test_spatial_join_df_temp_id(pts, polys_wkb_df):
     assert out.count() >= pts.count()  # fan-out >= 1 row per point
 
 
-def test_spatial_join_df_salt_invariance(pts, polys_wkb_df):
-    """The salted cogroup is a pure parallelism knob — results are
-    identical at salt=1 and salt=16."""
-    a = sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url", salt=1)
-    b = sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url", salt=16)
-    assert sorted(map(tuple, a.select("url", "poly_id").collect())) == \
-        sorted(map(tuple, b.select("url", "poly_id").collect()))
+def test_spatial_join_df_hot_polygon_skew_split(spark):
+    """Every point lies inside ONE polygon. With broadcast off and low
+    AQE skew thresholds the poly_id refine join is shuffled and its
+    hot partition is split by AQE's skew join; the pairs still equal
+    the PolygonIndex path."""
+    from rsgislib_spark.geometry import wkb
+
+    def square(x0, y0, d):
+        return [np.array([[x0, y0], [x0 + d, y0], [x0 + d, y0 + d],
+                          [x0, y0 + d], [x0, y0]], dtype=np.float64)]
+
+    layer = [dict(poly_id=i, rings=square(-150.0 + 30 * i, -60.0, 5.0))
+             for i in range(8)] + [dict(poly_id=99, rings=square(10, 10, 10))]
+    polys = spark.createDataFrame(
+        [(p["poly_id"], bytearray(wkb.polygon_to_wkb(p["rings"])))
+         for p in layer], "poly_id BIGINT, geometry BINARY")
+    pts_hot = spark.range(0, 4000, 1, 8).select(
+        F.col("id").alias("pt_id"),
+        (F.lit(10.5) + (F.col("id") % 89) * 0.1).alias("lon"),
+        (F.lit(10.5) + (F.col("id") % 83) * 0.1).alias("lat"))
+    idx = sj.PolygonIndex(layer, res=None)
+    want = {tuple(r) for r in sj.spatial_join(pts_hot, idx, pt_id_col="pt_id")
+            .select("pt_id", "poly_id").collect()}
+    assert len(want) == 4000 and {p for _, p in want} == {99}
+
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+    }
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        out = sj.spatial_join_df(pts_hot, polys, pt_id_col="pt_id",
+                                 with_payload=False)
+        got = {tuple(r) for r in out.collect()}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert got == want
+    assert "skew=true" in plan
 
 
 def test_poly_cover_df_matches_index_cover(spark, polys_wkb_df):
@@ -273,13 +314,28 @@ def test_poly_cover_df_default_is_small(spark, polys_wkb_df):
 
 
 def test_spatial_join_df_plan_no_driver_collect(pts, polys_wkb_df):
-    """Structural: the large-layer plan contains the cogrouped Arrow
-    refine (FlatMapCoGroupsInPandas) and the polygon side is a real
-    scan feeding mapInPandas — no LocalTableScan of collected rows."""
+    """Structural: the large-layer plan refines in one MapInPandas pass
+    over the poly_id join (no per-group cogroup) and the polygon side
+    is a real scan feeding mapInPandas — no LocalTableScan of
+    collected rows."""
     out = sj.spatial_join_df(pts, polys_wkb_df, pt_id_col="url")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert "MapInPandas" in plan
+    assert "FlatMapCoGroupsInPandas" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_spatial_join_df_leaves_no_cached_data(spark, pts, polys_wkb_df):
+    """The cover is materialized by localCheckpoint, which the
+    session's CacheManager does not hold: after the result is consumed
+    no cache entry is left behind for later queries to hit."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    # a polygon plan no other test builds: caching a plan that is
+    # already cached is a no-op and would hide a new entry
+    polys = polys_wkb_df.where(F.col("poly_id") != -4242)
+    before = cm.numCachedEntries()
+    sj.spatial_join_df(pts, polys, pt_id_col="url").collect()
+    assert cm.numCachedEntries() == before
 
 
 def test_codegen_refine_equals_arrow_refine(pts, oracle_pairs):
@@ -355,10 +411,8 @@ def test_auto_refine_dispatch_by_edge_count(pts):
 
 
 def test_spatial_join_df_int_poly_id(spark, pts, polys_wkb_df, oracle_pairs):
-    """INT (not BIGINT) poly_id column: the refine bucket hash must
-    cast to BIGINT before hashing (xxhash64 is type-sensitive —
-    hashing an INT raw would bucket the polygon side differently from
-    the BIGINT cover side and silently return an empty join)."""
+    """INT (not BIGINT) poly_id column: the refine join still matches
+    it to the BIGINT cover ids."""
     polys_int = polys_wkb_df.withColumn(
         "poly_id", F.col("poly_id").cast("int"))
     got = {(r.url, r.poly_id)

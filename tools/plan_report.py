@@ -66,13 +66,14 @@ CHECKS = {
         forbid=["hashpartitioning(url", "hashpartitioning(html",
                 "hashpartitioning(text", "Exchange SinglePartition"],
     ),
-    "spatial_join_df on a large polygon layer (cogrouped refine)": dict(
-        # rings travel with the candidate batch (FlatMapCoGroups);
-        # the polygon side must be a real scan feeding mapInPandas,
-        # never a LocalTableScan of driver-collected rows
-        expect=["FlatMapCoGroupsInPandas"],
-        forbid=["LocalTableScan", "CartesianProduct",
-                "BroadcastNestedLoopJoin"],
+    "spatial_join_df on a large polygon layer (poly_id join → mapInPandas refine)": dict(
+        # rings travel with the candidate rows through one poly_id
+        # join and ONE mapInPandas pass (no per-group cogroup); the
+        # polygon side must be a real scan feeding mapInPandas, never
+        # a LocalTableScan of driver-collected rows
+        expect=["MapInPandas"],
+        forbid=["FlatMapCoGroupsInPandas", "LocalTableScan",
+                "CartesianProduct", "BroadcastNestedLoopJoin"],
     ),
     "lsh near-dup pairs (banded buckets → candidate equi-join → exact rescore)": dict(
         # signature dots above _CODEGEN_MAX_TERMS run in ONE Arrow
